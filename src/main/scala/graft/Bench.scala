@@ -7,6 +7,8 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerStageSubmitted}
 import org.apache.spark.sql.SparkSession
 
+import scala.util.Try
+
 /** Per-query engine timing for the driver's round bench.
   *
   * Attribution v4 (VERDICT r8 #1 — fourth relocation of ~70s of JVM
@@ -138,7 +140,8 @@ object Bench {
     * CONTEXT's scan/shuffle path with the parquet count alone. */
   private def warmup(spark: SparkSession, sfDir: String,
                      full: Boolean): Unit = {
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    // through Tables.load, so the warm-up also fills its schema memo
+    Tables.lineitem(spark, sfDir).count()
     // every chunk (VERDICT r9 #5): warm the fresh context's shuffle
     // write/read path too, so a chunk's first query isn't charged
     // ~0.26s of first-exchange setup the other queries don't pay
@@ -147,7 +150,7 @@ object Bench {
       spark.range(10000).groupBy(col("id") % 64).count().count()
     }
     if (full) {
-      spark.read.parquet(s"$sfDir/documents.parquet")
+      Tables.load(spark, sfDir, "documents")
         .select(org.apache.spark.sql.functions.explode(
           graft.functions.TextFns.tokenize(
             org.apache.spark.sql.functions.col("text"))))
@@ -164,6 +167,59 @@ object Bench {
       }
     }
     spark.catalog.clearCache()
+  }
+
+  /** The committed per-query task-seconds baseline, `{"query": secs}`.
+    * Warn-only: an unreadable file gives an empty map, and an entry
+    * whose value does not parse as a number (e.g. `1.2.3`) is dropped
+    * instead of failing the run. */
+  private[graft] def readBaseline(path: String): Map[String, Double] = {
+    val p = java.nio.file.Path.of(path)
+    if (java.nio.file.Files.isReadable(p)) {
+      val txt = java.nio.file.Files.readString(p)
+      "\"([^\"]+)\"\\s*:\\s*(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)".r
+        .findAllMatchIn(txt)
+        .flatMap(m => Try(m.group(2).toDouble).toOption.map(m.group(1) -> _))
+        .toMap
+    } else Map.empty
+  }
+
+  /** `s` as a JSON string literal, with backslashes and quotes escaped. */
+  private[graft] def jstr(s: String): String =
+    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+
+  /** The full one-line JSON artifact. `errors` values arrive already
+    * stripped of control characters, quotes and backslashes. */
+  private[graft] def artifact(results: Seq[(String, Double)],
+      jobSecs: Seq[(String, Double)], taskSecs: Seq[(String, Double)],
+      errors: Seq[(String, String)], jobIncomplete: Seq[String],
+      taskRegressions: Seq[(String, Double)], baselinePath: String,
+      sfDir: String): String = {
+    def jmap(m: Seq[(String, Double)]): String =
+      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val errs = errors.map { case (k, v) => s"\"$k\":\"$v\"" }
+      .mkString("{", ",", "}")
+    val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
+    // the reading key ships IN the artifact (VERDICT r9 #3) so a future
+    // round can't misread AQE stage-concurrency as a regression
+    val jobKey = "queries_job sums listener-attributed job wall-time " +
+      "per query. job >> wall is EXPECTED (AQE materializes query " +
+      "stages as concurrent jobs); wall >> job is the phantom-debt " +
+      "signal (un-attributed session work landing on the clock). " +
+      "Queries in queries_job_incomplete hit the 10s listener drain " +
+      "bound and may undercount job time. queries_task sums executor " +
+      "task run time (executorRunTime, all cores) per query - the one " +
+      "number robust to BOTH machine drift and stage concurrency; " +
+      "compare IT across rounds."
+    val jinc = jobIncomplete.map("\"" + _ + "\"").mkString("[", ",", "]")
+    s"""{"metric":"total","value":$total,"unit":"sec",""" +
+      s""""queries":${jmap(results)},"queries_job":${jmap(jobSecs)},""" +
+      s""""queries_task":${jmap(taskSecs)},""" +
+      s""""queries_job_key":"$jobKey",""" +
+      s""""task_baseline":${jstr(baselinePath)},""" +
+      s""""task_regressions":${jmap(taskRegressions)},""" +
+      s""""queries_job_incomplete":$jinc,"errors":$errs,""" +
+      s""""sf":${jstr(sfDir)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -251,15 +307,7 @@ object Bench {
     // not isolated warm probes. Additions-only: new top-level fields.
     val baselinePath = sys.env.getOrElse("SPARK_GRAFT_BENCH_TASK_BASELINE",
       "bench_task_baseline.json")
-    val baseline: Map[String, Double] = {
-      val p = java.nio.file.Path.of(baselinePath)
-      if (java.nio.file.Files.isReadable(p)) {
-        val txt = java.nio.file.Files.readString(p)
-        "\"([^\"]+)\"\\s*:\\s*(-?[0-9.]+(?:[eE][+-]?[0-9]+)?)".r
-          .findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } else Map.empty
-    }
+    val baseline = readBaseline(baselinePath)
     val taskRegressions = taskSecs.toSeq.flatMap { case (n, t) =>
       baseline.get(n) match {
         // 0.5s floor: sub-second queries ratio-flap on host noise
@@ -268,33 +316,10 @@ object Bench {
         case _ => None
       }
     }.sortBy(-_._2)
-    def jmap(m: Iterable[(String, Double)]): String =
-      m.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val qs = jmap(results)
-    val jq = jmap(jobSecs)
-    val tq = jmap(taskSecs)
-    val errs = errors.map { case (k, v) => s"\"$k\":\"$v\"" }
-      .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
-    // the reading key ships IN the artifact (VERDICT r9 #3) so a future
-    // round can't misread AQE stage-concurrency as a regression
-    val jobKey = "queries_job sums listener-attributed job wall-time " +
-      "per query. job >> wall is EXPECTED (AQE materializes query " +
-      "stages as concurrent jobs); wall >> job is the phantom-debt " +
-      "signal (un-attributed session work landing on the clock). " +
-      "Queries in queries_job_incomplete hit the 10s listener drain " +
-      "bound and may undercount job time. queries_task sums executor " +
-      "task run time (executorRunTime, all cores) per query - the one " +
-      "number robust to BOTH machine drift and stage concurrency; " +
-      "compare IT across rounds."
-    val jinc = jobIncomplete.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val trj = jmap(taskRegressions)
-    val json = s"""{"metric":"total","value":$total,"unit":"sec",""" +
-      s""""queries":$qs,"queries_job":$jq,"queries_task":$tq,""" +
-      s""""queries_job_key":"$jobKey",""" +
-      s""""task_baseline":"${if (baseline.isEmpty) "" else baselinePath}",""" +
-      s""""task_regressions":$trj,""" +
-      s""""queries_job_incomplete":$jinc,"errors":$errs,"sf":"$sfDir"}"""
+    val json = artifact(results.toSeq, jobSecs.toSeq, taskSecs.toSeq,
+      errors.toSeq, jobIncomplete.toSeq, taskRegressions,
+      if (baseline.isEmpty) "" else baselinePath, sfDir)
     // full payload first in the log, and always in a file: the
     // driver's log-tail parse only sees the LAST ~2000 chars, which a
     // 250-query map overflows — that full map lives here
@@ -317,7 +342,7 @@ object Bench {
       s""""n_queries":${results.length},"median":${r3(median)},""" +
       s""""n_errors":${errors.size},"queries":$top,""" +
       s""""n_task_regressions":${taskRegressions.length},""" +
-      s""""queries_full":"$outFile","sf":"$sfDir"}""")
+      s""""queries_full":${jstr(outFile.toString)},"sf":${jstr(sfDir)}}""")
     if (taskRegressions.nonEmpty)
       System.err.println("[bench] task-time regressions vs committed " +
         s"baseline (>1.5x): ${taskRegressions.take(20).map {

@@ -1,22 +1,67 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.ConcurrentHashMap
 
-/** Fixture-table loaders (schemas in /root/repo/FIXTURES.md).
+import org.apache.hadoop.fs.{LocatedFileStatus, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+/** Fixture-table loaders (schemas in FIXTURES.md).
   *
   * The reference addressed columns by ordinal over '|'-split text lines
   * (e.g. reference Q1.scala:39-41); here every table is columnar parquet
   * with a named schema, so Catalyst column pruning + filter pushdown reach
   * the scan for free. At 100 TB these would be partitioned/bucketed tables
   * behind a catalog; the `dir` parameter stands in for that resolution.
+  *
+  * Schema memo: Spark infers a parquet schema by running a job (a footer
+  * read per file), so an unmemoized `load` pays one scheduled job per
+  * table per query before any plan runs. `load` infers each table's
+  * schema once and then reads with it supplied, which plans with no job.
+  * The memo key is the qualified path plus the session's parquet-read
+  * confs (`spark.sql.parquet.*`, `spark.sql.legacy.parquet.*`: `events`
+  * flips `nanosAsLong`, which changes the inferred `ts` type). Each entry
+  * carries a stamp of the path's file listing (name, length and mtime of
+  * every file under it); a table rewritten at the same path no longer
+  * matches its stamp and is inferred again. Every call still builds a
+  * fresh relation with fresh attribute ids, so self-joins are unaffected.
   */
 object Tables {
   val all: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private type Stamp = Seq[(String, Long, Long)]
+  private val schemas =
+    new ConcurrentHashMap[(String, Map[String, String]), (Stamp, StructType)]()
+
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val file = s"$dir/$name.parquet"
+    val path = new Path(file)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val qualified = fs.makeQualified(path).toString
+    // a missing path stamps empty; inference below then raises Spark's
+    // own "path does not exist" error, and nothing is memoized
+    val stamp: Stamp = if (!fs.exists(path)) Nil else {
+      val it = fs.listFiles(path, true)
+      val files = Seq.newBuilder[LocatedFileStatus]
+      while (it.hasNext) files += it.next()
+      files.result().map(f =>
+        (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    }
+    val readConfs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = (qualified, readConfs)
+    val memo = schemas.get(key)
+    val schema = if (memo != null && memo._1 == stamp) memo._2 else {
+      val inferred = spark.read.parquet(file).schema
+      schemas.put(key, (stamp, inferred))
+      inferred
+    }
+    spark.read.schema(schema).parquet(file)
+  }
 
   def region(s: SparkSession, d: String): DataFrame = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = load(s, d, "nation")

@@ -438,12 +438,16 @@ object Graph {
       .limit(k)
   }
 
+  /** Added to supplier keys in [[customerSupplierEdges]] so they never
+    * collide with custkeys; holds while every custkey is below it. */
+  val supplierKeyOffset: Long = 1000000L
+
   /** A deterministic bipartite-ish graph from the fixture tables for the
     * queries surface: customer ⇄ supplier whenever a lineitem links them
     * through an order. Supplier ids are offset to avoid key collision.
     */
   def customerSupplierEdges(s: SparkSession, dir: String,
-                            supplierOffset: Long = 1000000L,
+                            supplierOffset: Long = supplierKeyOffset,
                             distinctPairs: Boolean = true): DataFrame = {
     val li = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
     val o = Tables.orders(s, dir).select("o_orderkey", "o_custkey")
@@ -826,8 +830,21 @@ object Graph {
     */
   def twoHopReach(s: SparkSession, dir: String, k: Int = 50,
                   degCap: Int = 64): DataFrame = {
+    // the bipartite rewrite below is exact only while every edge has
+    // exactly one endpoint (its customer) under the supplier offset. A
+    // custkey at or past the offset (TPC-H SF >= 7) merges the two key
+    // spaces and would silently miscount, so fail instead. The check
+    // is a lazy column, evaluated by the eager register's job.
+    val off = supplierKeyOffset
     val e = customerSupplierEdges(s, dir)
-      .select(col("src"), col("dst")).persist()
+      .select(col("src"), col("dst"))
+      .filter(when((col("src") < off) =!= (col("dst") < off), lit(true))
+        .otherwise(raise_error(concat(
+          lit(s"twoHopReach: a custkey reaches the supplier key offset $off"
+            + " (customer and supplier key spaces overlap); edge "),
+          col("src").cast("string"), lit(" -> "),
+          col("dst").cast("string")))))
+      .persist()
     graft.CacheScope.register(e) // eager: degree filter + both hop joins
     // the degree table is |V| rows — broadcast it so the cap filter
     // never shuffles the edge list; the wedge join proper hashes on

@@ -46,3 +46,30 @@ class TwoHopReachSpec extends SparkSpec {
     assert(got == exp, s"rewrite diverged at degCap=3:\n got=$got\n exp=$exp")
   }
 }
+
+/** twoHopReach's bipartite rewrite needs every custkey below the
+  * supplier key offset; a fixture whose custkey crosses it must fail
+  * with a message naming the overlap, not return a wrong count. */
+class TwoHopReachOffsetSpec extends SparkSpec {
+
+  private def fixture(custkeys: Seq[Long]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("reach-offset").toString
+    custkeys.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+      .toDF("o_orderkey", "o_custkey").write.parquet(s"$dir/orders.parquet")
+    custkeys.indices.flatMap(i => Seq((i.toLong, 1L), (i.toLong, 2L)))
+      .toDF("l_orderkey", "l_suppkey").write.parquet(s"$dir/lineitem.parquet")
+    dir
+  }
+
+  test("a custkey at the supplier offset fails loudly") {
+    val ok = fixture(Seq(1L, 2L, 3L))
+    assert(Graph.twoHopReach(spark, ok).count() > 0)
+    val bad = fixture(Seq(1L, Graph.supplierKeyOffset + 3, 3L))
+    val err = intercept[Exception](Graph.twoHopReach(spark, bad).collect())
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause)
+      .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).toSeq
+    assert(msgs.exists(_.contains("reaches the supplier key offset")),
+      s"unexpected failure: ${msgs.mkString(" | ")}")
+  }
+}
